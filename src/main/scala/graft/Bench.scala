@@ -203,7 +203,7 @@ object Bench {
     // 1498 + sbt trailer 73), and 4-dp values wasted 2 bytes/entry —
     // eight queries that IMPROVED fell off the list and the driver's
     // PERF mislabeled them `dropped_from_bench`. The line now uses
-    // budget 1850 with 2-dp per-query values (~20% more entries), and
+    // budget 1880 with 2-dp per-query values (~20% more entries), and
     // `n_off_list` makes a missing query provably "fell off the capped
     // list" rather than "removed" — the full-precision map stays
     // durable in target/bench.json.

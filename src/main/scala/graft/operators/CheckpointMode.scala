@@ -30,11 +30,13 @@ import org.apache.spark.sql.DataFrame
  * truncated lineage but defers materialization to the first action:
  * a FIXED-iteration loop (pagerank/hits/ppr — no per-round
  * convergence action) then runs as ONE job DAG instead of one job
- * per round, which removes iterations-many scheduling barriers. Not
- * for convergence loops ([[Dedup.clusters]]' label propagation,
- * kmeans): their per-round driver decision forces materialization
- * anyway, and the eager form keeps the convergence count from racing
- * a concurrent consumer into duplicate partition computation.
+ * per round, which removes iterations-many scheduling barriers.
+ * Convergence loops ([[Dedup.clusters]]' label propagation, kmeans)
+ * may use it for their in-loop steps too, when the per-round
+ * convergence count is a full scan of the step: that count then
+ * materializes the blocks inside its own job (one job per round
+ * instead of two), and nothing else reads the step before it
+ * returns — `Dedup.clustersLabelProp` states the full argument.
  */
 sealed trait CheckpointMode {
   def apply(df: DataFrame): DataFrame

@@ -465,7 +465,7 @@ object Dedup {
       least(ceil(log(col("__bc").cast("double") / lit(maxBucket.toDouble)) /
         lit(-math.log(threshold))), lit(RefineRows))).cast("int")
     // the multi-member census is a tiny (band, key, ext) frame with
-    // FOUR consumers (the census probe, tier 1a's join, hotRows'
+    // THREE consumers (the census probe, tier 1a's join, hotRows'
     // join) — checkpointed so the probe's aggregation isn't re-run
     // per consumer. Small enough (one row per multi-member bucket)
     // that the LogicalRDD's unknown size can't derail a join choice:

@@ -2,7 +2,8 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.JsonNode
 
-import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /**
  * Per-database transactional commit log — the cross-process write
@@ -11,11 +12,13 @@ import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
  * crash-consistent B-tree (database.go:175-254, 275-302); at cluster
  * scale the equivalent is a table-format commit log (the public
  * Delta/Iceberg design): immutable, uniquely-named data files plus an
- * ordered log of JSON manifests, where **creating log entry N+1 with
- * `CREATE_NEW` is the one atomic, contended operation**. Writers
- * race; exactly one wins the filesystem's atomic create, losers
- * re-read the new state and retry. Nothing else needs cross-process
- * coordination:
+ * ordered log of JSON manifests, where **publishing log entry N+1 is
+ * the one atomic, contended operation**: the manifest is written in
+ * full to a temp file, then hard-linked to its version name, which
+ * fails if the name exists. Writers race; exactly one wins the link,
+ * losers re-read the new state and retry ([[CommitLog.commit]]), and
+ * a reader never sees a partly written manifest. Nothing else needs
+ * cross-process coordination:
  *
  *  - data files are written once under fresh UUID names and never
  *    modified — a reader holding snapshot N scans exactly the files
@@ -33,9 +36,10 @@ import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
  * commits so snapshot reconstruction replays O(10) small JSON files,
  * not the table's whole history.
  *
- * On a POSIX filesystem `CREATE_NEW` is atomic; object stores without
- * atomic create-if-absent need a commit service in front of the log
- * (the public Delta-on-S3 arrangement) — the protocol is unchanged.
+ * On a POSIX filesystem `link(2)` is an atomic create-if-absent of a
+ * complete file; object stores without atomic create-if-absent need a
+ * commit service in front of the log (the public Delta-on-S3
+ * arrangement) — the protocol is unchanged.
  */
 final class CommitLog(dbDir: Path) {
   import CommitLog._
@@ -72,21 +76,18 @@ final class CommitLog(dbDir: Path) {
     else ""
   }
 
-  private def listLog(): Seq[Long] = {
-    if (!Files.isDirectory(logDir)) return Nil
-    val s = Files.list(logDir)
-    try {
-      val it = s.iterator()
-      val b = Seq.newBuilder[Long]
-      while (it.hasNext) {
-        val n = it.next().getFileName.toString
-        // strict name match: a stray foreign .json (editor backup,
-        // copied file) must not brick the db with a parse error
-        if (manifestName.matches(n)) b += n.stripSuffix(".json").toLong
-      }
-      b.result().sorted
-    } finally s.close()
-  }
+  private def logNames(): Seq[String] =
+    if (!Files.isDirectory(logDir)) Nil
+    else {
+      val s = Files.list(logDir)
+      try s.iterator().asScala.map(_.getFileName.toString).toVector
+      finally s.close()
+    }
+
+  // strict name match: a stray foreign .json (editor backup, copied
+  // file) must not brick the db with a parse error
+  private def listLog(): Seq[Long] = logNames()
+    .filter(manifestName.matches).map(_.stripSuffix(".json").toLong).sorted
 
   private val manifestName = "^[0-9]{20}\\.json$".r
   // same strictness as manifests: a stray foreign file ending in
@@ -100,35 +101,87 @@ final class CommitLog(dbDir: Path) {
     logDir.resolve(f"$v%020d$ckptSuffix")
 
   /** Checkpoint versions on disk, ascending. */
-  private def listCkpts(): Seq[Long] = {
-    if (!Files.isDirectory(logDir)) return Nil
-    val s = Files.list(logDir)
-    try {
-      val it = s.iterator()
-      val b = Seq.newBuilder[Long]
-      while (it.hasNext) {
-        val n = it.next().getFileName.toString
-        if (ckptName.matches(n)) b += n.stripSuffix(ckptSuffix).toLong
-      }
-      b.result().sorted
-    } finally s.close()
+  private def listCkpts(): Seq[Long] = logNames()
+    .filter(ckptName.matches).map(_.stripSuffix(ckptSuffix).toLong).sorted
+
+  /** Atomically publish manifest `m` as version `m.v`: write it in
+   * full under a temp name, then hard-link it into place. Returns
+   * false if another writer won the version (`link` fails with
+   * EEXIST) — caller re-reads and retries. A plain or atomic move
+   * would not do: the first checks then renames, the second replaces
+   * an existing manifest. */
+  def tryCommit(m: Manifest): Boolean = {
+    val tmp = logDir.resolve(s"$commitTmp${java.util.UUID.randomUUID()}")
+    Files.write(tmp, m.toJson.getBytes("UTF-8"))
+    try { Files.createLink(manifestPath(m.v), tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
   }
 
-  /** Atomically commit manifest `m` as version `m.v`. Returns false if
-   * another writer won the version — caller re-reads and retries. */
-  def tryCommit(m: Manifest): Boolean =
-    try {
-      Files.write(manifestPath(m.v), m.toJson.getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW)
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+  /** The one write path: stage a change with `attempt` against the
+   * current snapshot and race for the next version. An append that
+   * loses is abandoned and staged again from a fresh snapshot. A
+   * replace that loses only to appends rebases them into its live set
+   * (dirty, so read-side dedup still applies) without staging again;
+   * one that meets another replace, or a window [[prune]] left with
+   * gaps, is abandoned and computed again (the table-format rule:
+   * append vs replace commutes, replace vs replace does not). An
+   * abandoned change runs its cleanup; after [[AppendAttempts]] lost
+   * appends or [[ReplaceAttempts]] lost replaces the write throws
+   * IllegalStateException (server-side contention, not a caller
+   * error). `what` names the write in that message. */
+  def commit[R](what: String)(attempt: Snapshot => Attempt[R]): R = {
+    @scala.annotation.tailrec
+    def go(lost: Int): R = {
+      val snap = snapshot()
+      attempt(snap) match {
+        case NoChange(r) => r
+        case s: Staged[R @unchecked] =>
+          if (land(snap, s)) { checkpointMaybe(snapshot()); s.result }
+          else {
+            s.cleanup()
+            val cap = if (s.kind == "append") AppendAttempts else ReplaceAttempts
+            if (lost + 1 >= cap) throw new IllegalStateException(
+              s"$what lost ${lost + 1} commit races")
+            go(lost + 1)
+          }
+      }
+    }
+    go(0)
+  }
+
+  /** Race `s`, staged against `snap`, for the next version, rebasing
+   * a replace over the appends that landed first. False = abandoned.
+   * An append that already lists one of the replace's own files (a
+   * concurrent adopter of the same legacy files) is not rebased: the
+   * manifest would list the file twice. */
+  private def land(snap: Snapshot, s: Staged[_]): Boolean = {
+    val own = s.files.map(_.name).toSet
+    var since: Option[Seq[Manifest]] = Some(Nil)
+    var won = false
+    while (!won && since.nonEmpty) {
+      val ms = since.get
+      val appended = ms.flatMap(_.files)
+      won = tryCommit(Manifest(snap.version + ms.size + 1, s.kind,
+        s.keep ++ s.files ++ appended, seqHi = (s.seqHi +: ms.map(_.seqHi)).max,
+        clean = s.clean && appended.isEmpty))
+      if (!won) since = commitsSinceExact(snap.version).filter(ms =>
+        s.kind == "replace" && ms.forall(_.kind == "append") &&
+          !ms.exists(_.files.exists(f => own(f.name))))
+    }
+    won
+  }
 
   /** Current table state: latest checkpoint + replay of newer
    * manifests. */
   def snapshot(): Snapshot = {
     val versions = listLog()
     if (versions.isEmpty) Snapshot(0, Vector(), clean = true, 0)
-    else stateAt(versions, versions.last)
+    else try stateAt(versions, versions.last) catch {
+      // prune removed a file this listing named (two checkpoints
+      // landed mid-read): the listing is stale, so list again
+      case _: java.nio.file.NoSuchFileException => snapshot()
+    }
   }
 
   /** Table state as of committed version `v` (time travel). The
@@ -158,7 +211,7 @@ final class CommitLog(dbDir: Path) {
    * pruning has removed part of it (possible only when ≥2 checkpoints
    * landed after `v` — the caller must recompute from a fresh
    * snapshot instead of silently dropping the missing commits). */
-  def commitsSinceExact(v: Long): Option[Seq[Manifest]] = {
+  private[sources] def commitsSinceExact(v: Long): Option[Seq[Manifest]] = {
     val vs = listLog().filter(_ > v)
     val contiguous = vs.zipWithIndex.forall { case (x, i) => x == v + 1 + i }
     if (contiguous) Some(vs.map(readManifest)) else None
@@ -195,7 +248,7 @@ final class CommitLog(dbDir: Path) {
   def checkpointMaybe(s: Snapshot): Unit =
     if (s.version > 0 && s.version % CheckpointEvery == 0 &&
         !Files.exists(ckptPath(s.version))) {
-      val tmp = logDir.resolve(s".ckpt-${java.util.UUID.randomUUID()}")
+      val tmp = logDir.resolve(s"$ckptTmp${java.util.UUID.randomUUID()}")
       Files.write(tmp, s.toJson.getBytes("UTF-8"))
       Files.move(tmp, ckptPath(s.version), StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
@@ -216,8 +269,17 @@ final class CommitLog(dbDir: Path) {
    * [[commitsSinceExact]] and recomputes; time travel below the floor
    * fails with "no committed version" (table-format retention
    * semantics). Races are benign: prune only deletes files replay no
-   * longer needs, and double deletes are no-ops. */
+   * longer needs, and double deletes are no-ops. Temp files older
+   * than [[TmpGraceMs]] (left by writers that died before publishing)
+   * go too. */
   private def prune(): Unit = {
+    val stale = System.currentTimeMillis() - TmpGraceMs
+    logNames().filter(n => n.startsWith(commitTmp) || n.startsWith(ckptTmp))
+      .foreach { n =>
+        try if (Files.getLastModifiedTime(logDir.resolve(n)).toMillis < stale)
+          Files.deleteIfExists(logDir.resolve(n))
+        catch { case _: java.nio.file.NoSuchFileException => () }
+      }
     val ckpts = listCkpts()
     if (ckpts.isEmpty) return
     val newest = ckpts.last
@@ -237,7 +299,30 @@ final class CommitLog(dbDir: Path) {
 
 object CommitLog {
   val CheckpointEvery = 10
+  /** [[CommitLog.commit]]'s caps: lost appends, lost replaces. */
+  val AppendAttempts = 100
+  val ReplaceAttempts = 10
+  /** Age past which [[CommitLog.prune]] sweeps a leftover temp file. */
+  val TmpGraceMs: Long = 10 * 60 * 1000L
   private val ckptSuffix = ".ckpt.json"
+  // temp-file prefixes: neither name pattern of the log matches them
+  private val commitTmp = ".commit-"
+  private val ckptTmp = ".ckpt-"
+
+  /** What one write attempt against a snapshot produced
+   * ([[CommitLog.commit]]). */
+  sealed trait Attempt[+R]
+  /** Nothing to commit; `result` is returned as is. */
+  final case class NoChange[R](result: R) extends Attempt[R]
+  /** A change staged against the attempt's snapshot. `kind` is
+   * `append` or `replace`; a replace's live set is `keep ++ files`
+   * plus any appends it rebases over. `clean` is the flag to commit if
+   * no append lands first. `cleanup` runs when the change is
+   * abandoned. */
+  final case class Staged[R](kind: String, files: Seq[FileEntry],
+      seqHi: Long, clean: Boolean, result: R,
+      keep: Seq[FileEntry] = Nil, cleanup: () => Unit = () => ())
+      extends Attempt[R]
 
   /** One immutable data file: name relative to the db dir + size (so
    * `info`'s space accounting never walks the directory), plus

@@ -155,26 +155,10 @@ class SeriesStore(spark: SparkSession, root: String) {
             val markerClean = Files.exists(p.resolve("_graft_clean"))
             if (!log.initialized) log.init()
             if (parts.nonEmpty) {
-              var done = false
-              while (!done) {
-                val snap = log.snapshot()
-                // re-derive the adoptable set EACH attempt: a lost race
-                // means another adopter (or a compact+vacuum) moved the
-                // table — re-committing the precomputed entries would
-                // double-adopt what the winner already referenced, or
-                // resurrect references to files vacuum just deleted
-                val fresh = SeriesStore.adoptable(p, entries, snap)
-                if (fresh.isEmpty) done = true // all adopted elsewhere
-                else {
-                  // clean only when nothing else landed first: with a
-                  // concurrent append in the snapshot, the union needs
-                  // the read-side dedup regardless of the marker
-                  val asClean = markerClean && snap.files.isEmpty
-                  done = log.tryCommit(CommitLog.Manifest(snap.version + 1,
-                    if (asClean) "replace" else "append", fresh,
-                    seqHi = maxSeq, clean = asClean))
-                }
-              }
+              // not through commitWrite: a lost attempt must not delete
+              // its "staged" files, which are the user's legacy data
+              log.commit(s"adoption of $db")(
+                SeriesStore.adoption(p, entries, maxSeq, markerClean))
               Files.deleteIfExists(p.resolve("_graft_clean"))
             }
           }
@@ -199,6 +183,23 @@ class SeriesStore(spark: SparkSession, root: String) {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def withWriteLock[T](db: String)(f: => T): T =
     writeLocks.computeIfAbsent(db, _ => new Object).synchronized(f)
+
+  /** Every store write's commit: [[CommitLog.commit]] under the write
+   * lock and the stage guard, on an adopted, existing db. An abandoned
+   * attempt's staged files are deleted. */
+  private def commitWrite[R](db: String, what: String)(
+      attempt: CommitLog.Snapshot => CommitLog.Attempt[R]): R =
+    withWriteLock(db)(withStageGuard(db) {
+      ensureMigrated(db)
+      logOf(db).commit(s"$what of $db") { snap =>
+        require(snap.version >= 1, s"no such database: $db")
+        attempt(snap) match {
+          case s: CommitLog.Staged[R @unchecked] => s.copy(cleanup = () =>
+            s.files.foreach(e => Files.deleteIfExists(dbPath(db).resolve(e.name))))
+          case none => none
+        }
+      }
+    })
 
   // In-flight stage registry: between stage() and its commit the moved
   // files are in NO snapshot, so a concurrent vacuum whose grace is
@@ -352,9 +353,6 @@ class SeriesStore(spark: SparkSession, root: String) {
       entries
     }
 
-  private def unstage(db: String, entries: Seq[CommitLog.FileEntry]): Unit =
-    entries.foreach(e => Files.deleteIfExists(dbPath(db).resolve(e.name)))
-
   /** Remove data files no longer referenced by the current snapshot
    * and stale staging dirs, keeping anything younger than `graceMs`.
    * The grace window protects TWO in-flight populations: readers
@@ -453,10 +451,8 @@ class SeriesStore(spark: SparkSession, root: String) {
       case None => System.currentTimeMillis() * 1000000L
     }
     import spark.implicits._
-    withWriteLock(db) {
-      appendCommit(db) { seqBase =>
-        (Seq((ns, seqBase, json)).toDF("ts", "seq", "doc"), seqBase)
-      }
+    appendCommit(db) { seqBase =>
+      (Seq((ns, seqBase, json)).toDF("ts", "seq", "doc"), seqBase)
     }
     stat(db).written.increment()
     TimeLib.formatCanonical(ns)
@@ -469,28 +465,10 @@ class SeriesStore(spark: SparkSession, root: String) {
    * returns (frame to stage, highest seq reserved). */
   private def appendCommit(db: String, catPtrs: Seq[String] = Nil,
       numPtrs: Seq[String] = Nil)(
-      mk: Long => (DataFrame, Long)): Unit = withStageGuard(db) {
-    ensureMigrated(db)
-    val log = logOf(db)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      val snap = log.snapshot()
-      require(snap.version >= 1, s"no such database: $db")
-      val (data, seqHi) = mk(snap.lastSeq + 1)
-      val staged = stage(db, data, catPtrs, numPtrs)
-      val m = CommitLog.Manifest(snap.version + 1, "append", staged,
-        seqHi = seqHi, clean = false)
-      if (log.tryCommit(m)) { log.checkpointMaybe(log.snapshot()); done = true }
-      else {
-        unstage(db, staged)
-        attempts += 1
-        // server-side contention, not caller error: must not surface
-        // as the 400 an IllegalArgumentException would map to
-        if (attempts >= 100) throw new IllegalStateException(
-          s"append to $db lost $attempts commit races")
-      }
-    }
+      mk: Long => (DataFrame, Long)): Unit = commitWrite(db, "append") { snap =>
+    val (data, seqHi) = mk(snap.lastSeq + 1)
+    CommitLog.Staged("append", stage(db, data, catPtrs, numPtrs), seqHi,
+      clean = false, ())
   }
 
   /** Batched ingest of a `(ts LONG ns, doc STRING)` frame. The batch
@@ -541,12 +519,10 @@ class SeriesStore(spark: SparkSession, root: String) {
     val selected = docs.select(col("ts").cast(LongType).as("ts"),
       col("doc").cast(StringType).as("doc"))
     val parts = math.max(1, selected.rdd.getNumPartitions)
-    withWriteLock(db) {
-      appendCommit(db, catPtrs, numPtrs) { seqBase =>
-        (selected.select(col("ts"),
-          (monotonically_increasing_id() + lit(seqBase)).as("seq"), col("doc")),
-          seqBase + (parts.toLong << 33) - 1)
-      }
+    appendCommit(db, catPtrs, numPtrs) { seqBase =>
+      (selected.select(col("ts"),
+        (monotonically_increasing_id() + lit(seqBase)).as("seq"), col("doc")),
+        seqBase + (parts.toLong << 33) - 1)
     }
     stat(db).written.increment()
   }
@@ -800,8 +776,7 @@ class SeriesStore(spark: SparkSession, root: String) {
     var cond = lit(true)
     from.foreach(s => cond = cond && col("ts") >= parseBound(s))
     to.foreach(s => cond = cond && col("ts") < parseBound(s))
-    val (before, written) =
-      withWriteLock(db)(rewrite(db, _.filter(!cond), countBase = true))
+    val (before, written) = rewrite(db, _.filter(!cond), countBase = true)
     stat(db).deletes.increment()
     before - written
   }
@@ -856,7 +831,8 @@ class SeriesStore(spark: SparkSession, root: String) {
    * bounded by |files|) and the rewrite is a key-frame ANTI-JOIN
    * (broadcast under [[SeriesStore.DeleteKeysBroadcastMax]], shuffle
    * hash above — AQE's planning domain). Cost tracks AFFECTED files,
-   * not |files|·|keys| (ProbeMassDelete pins the 100× shape).
+   * not |files|·|keys| (BASELINE.md's mass-takedown item; the probe
+   * that measured it, ProbeMassDelete, is in git at f070dfa).
    *
    * `keys`' first column is the key: LONG = epoch-ns as stored,
    * STRING = parsed by the store's lenient parser with a loud
@@ -902,103 +878,76 @@ class SeriesStore(spark: SparkSession, root: String) {
 
   private def deleteKeyFrame(db: String, ks: DataFrame, nKeys: Long,
       catPtrs: Seq[String], numPtrs: Seq[String]): Long = {
-    val deleted = withWriteLock(db)(withStageGuard(db) {
-      val log = logOf(db)
-      var outer = 0
-      var result = -1L
-      while (outer < 10 && result < 0) {
-        val snap = snapshotOf(db)
-        // sorted-interval stab: stats files sorted by minTs broadcast
-        // as (mins, maxs, prefix-max-of-maxs); per key, binary-search
-        // the last minTs <= k and walk left while the prefix max still
-        // reaches k — O(log F + stabbed + overlap-depth) per key, the
-        // interval-tree walk without the tree. Stat-less files (legacy
-        // manifests) are always affected, as everywhere.
-        val statFiles = snap.files.filter(f => f.hasStats && f.rows > 0)
-          .sortBy(_.minTs).toArray
-        val mins = statFiles.map(_.minTs)
-        val maxs = statFiles.map(_.maxTs)
-        val pmax = maxs.scanLeft(Long.MinValue)(math.max).tail
-        val bc = spark.sparkContext.broadcast((mins, maxs, pmax))
-        val stabbed = try {
-          val probe = udf((k: Long) =>
-            SeriesStore.stabIntervals(bc.value._1, bc.value._2, bc.value._3, k))
-          ks.select(explode(probe(col("__k"))).as("__i")).distinct()
-            .collect().map(_.getInt(0))
-        } finally bc.unpersist()
-        val affected =
-          stabbed.toSeq.sorted.map(statFiles) ++ snap.files.filter(!_.hasStats)
-        if (affected.isEmpty) result = 0L
-        else {
-          val affectedNames = affected.map(_.name).toSet
-          val kept = snap.files.filterNot(f => affectedNames(f.name))
-          // pointer-axis recovery: the affected files' own manifest
-          // entries know which pointers were declared — without this,
-          // a takedown with defaulted ptrs would quietly weaken the
-          // touched files to ts-only pruning until the next declared
-          // compact (the kept files keep their stats either way)
-          val effCat =
-            if (catPtrs.nonEmpty) catPtrs
-            else affected.flatMap(_.catsBy).flatMap(_.keys).distinct
-          val effNum =
-            if (numPtrs.nonEmpty) numPtrs
-            else affected.flatMap(_.numBy).flatMap(_.keys).distinct
-          val paths = affected.map(f => dbPath(db).resolve(f.name).toString)
-          val rows = spark.read.schema(schema).parquet(paths: _*)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // anti-join rewrite: broadcast the key frame when it is
-            // small (the common takedown), shuffle-hash when a mass
-            // batch would not fit an executor broadcast
-            val keyJoin =
-              if (nKeys <= SeriesStore.DeleteKeysBroadcastMax) broadcast(ks)
-              else ks
-            val hit = rows.join(keyJoin, col("ts") === col("__k"),
-              "left_semi").count()
-            val survivors = rows.join(keyJoin, col("ts") === col("__k"),
-              "left_anti")
-            val n = survivors.count()
-            val staged =
-              if (n == 0) Seq.empty[CommitLog.FileEntry]
-              else {
-                val parts = math.max(1, affected.size)
-                // declared pointers re-record the rewritten files'
-                // stats (kept files keep theirs) — without them the
-                // survivors' files carry ts stats only until the next
-                // declared compact, compactSmall's documented rule
-                stage(db, (if (parts == 1) survivors.coalesce(1)
-                  else survivors.repartitionByRange(parts, col("ts")))
-                  .sortWithinPartitions("ts"), effCat, effNum)
-              }
-            var committed = false
-            var aborted = false
-            while (!committed && !aborted) {
-              val current = log.snapshot()
-              log.commitsSinceExact(snap.version) match {
-                case Some(since) if since.forall(_.kind == "append") =>
-                  val appended = since.flatMap(_.files)
-                  committed = log.tryCommit(CommitLog.Manifest(
-                    current.version + 1, "replace",
-                    kept ++ staged ++ appended,
-                    seqHi = current.lastSeq,
-                    // kept + rewritten files are duplicate-free iff
-                    // the snapshot was; rebased appends dirty as usual
-                    clean = snap.clean && appended.isEmpty))
-                case _ => aborted = true
-              }
+    val deleted = commitWrite(db, "deleteKeys") { snap =>
+      // sorted-interval stab: stats files sorted by minTs broadcast
+      // as (mins, maxs, prefix-max-of-maxs); per key, binary-search
+      // the last minTs <= k and walk left while the prefix max still
+      // reaches k — O(log F + stabbed + overlap-depth) per key, the
+      // interval-tree walk without the tree. Stat-less files (legacy
+      // manifests) are always affected, as everywhere.
+      val statFiles = snap.files.filter(f => f.hasStats && f.rows > 0)
+        .sortBy(_.minTs).toArray
+      val mins = statFiles.map(_.minTs)
+      val maxs = statFiles.map(_.maxTs)
+      val pmax = maxs.scanLeft(Long.MinValue)(math.max).tail
+      val bc = spark.sparkContext.broadcast((mins, maxs, pmax))
+      val stabbed = try {
+        val probe = udf((k: Long) =>
+          SeriesStore.stabIntervals(bc.value._1, bc.value._2, bc.value._3, k))
+        ks.select(explode(probe(col("__k"))).as("__i")).distinct()
+          .collect().map(_.getInt(0))
+      } finally bc.unpersist()
+      val affected =
+        stabbed.toSeq.sorted.map(statFiles) ++ snap.files.filter(!_.hasStats)
+      if (affected.isEmpty) CommitLog.NoChange(0L)
+      else {
+        val affectedNames = affected.map(_.name).toSet
+        val kept = snap.files.filterNot(f => affectedNames(f.name))
+        // pointer-axis recovery: the affected files' own manifest
+        // entries know which pointers were declared — without this,
+        // a takedown with defaulted ptrs would quietly weaken the
+        // touched files to ts-only pruning until the next declared
+        // compact (the kept files keep their stats either way)
+        val effCat =
+          if (catPtrs.nonEmpty) catPtrs
+          else affected.flatMap(_.catsBy).flatMap(_.keys).distinct
+        val effNum =
+          if (numPtrs.nonEmpty) numPtrs
+          else affected.flatMap(_.numBy).flatMap(_.keys).distinct
+        val paths = affected.map(f => dbPath(db).resolve(f.name).toString)
+        val rows = spark.read.schema(schema).parquet(paths: _*)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // anti-join rewrite: broadcast the key frame when it is
+          // small (the common takedown), shuffle-hash when a mass
+          // batch would not fit an executor broadcast
+          val keyJoin =
+            if (nKeys <= SeriesStore.DeleteKeysBroadcastMax) broadcast(ks)
+            else ks
+          val hit = rows.join(keyJoin, col("ts") === col("__k"),
+            "left_semi").count()
+          val survivors = rows.join(keyJoin, col("ts") === col("__k"),
+            "left_anti")
+          val n = survivors.count()
+          val staged =
+            if (n == 0) Seq.empty[CommitLog.FileEntry]
+            else {
+              val parts = math.max(1, affected.size)
+              // declared pointers re-record the rewritten files'
+              // stats (kept files keep theirs) — without them the
+              // survivors' files carry ts stats only until the next
+              // declared compact, compactSmall's documented rule
+              stage(db, (if (parts == 1) survivors.coalesce(1)
+                else survivors.repartitionByRange(parts, col("ts")))
+                .sortWithinPartitions("ts"), effCat, effNum)
             }
-            if (committed) {
-              log.checkpointMaybe(log.snapshot())
-              result = hit
-            } else unstage(db, staged)
-          } finally rows.unpersist()
-        }
-        outer += 1
+          // kept + rewritten files are duplicate-free iff the
+          // snapshot was; rebased appends dirty as usual
+          CommitLog.Staged("replace", staged, snap.lastSeq, snap.clean, hit,
+            keep = kept)
+        } finally rows.unpersist()
       }
-      if (result < 0) throw new IllegalStateException(
-        s"deleteKeys of $db lost $outer races to concurrent rewrites")
-      result
-    })
+    }
     stat(db).deletes.increment()
     deleted
   }
@@ -1036,8 +985,7 @@ class SeriesStore(spark: SparkSession, root: String) {
     require(rowsPerFile > 0, "rowsPerFile must be positive")
     require(catPtrs.size + numPtrs.size <= SeriesStore.PtrsMax,
       s"at most ${SeriesStore.PtrsMax} declared pointers per table")
-    withWriteLock(db)(rewrite(db, identity, countBase = false,
-      catPtrs, rowsPerFile, numPtrs))
+    rewrite(db, identity, countBase = false, catPtrs, rowsPerFile, numPtrs)
     stat(db).compacts.increment()
   }
 
@@ -1052,8 +1000,8 @@ class SeriesStore(spark: SparkSession, root: String) {
   def compact(db: String, catPtr: Option[String], rowsPerFile: Long,
       numPtr: Option[String]): Unit = {
     require(rowsPerFile > 0, "rowsPerFile must be positive")
-    withWriteLock(db)(rewrite(db, identity, countBase = false,
-      catPtr.toSeq, rowsPerFile, numPtr.toSeq))
+    rewrite(db, identity, countBase = false, catPtr.toSeq, rowsPerFile,
+      numPtr.toSeq)
     stat(db).compacts.increment()
   }
 
@@ -1080,54 +1028,29 @@ class SeriesStore(spark: SparkSession, root: String) {
    * silently degrade category/band pruning until the next full
    * compact — kept files keep whatever stats they had). */
   def compactSmall(db: String, smallBytes: Long,
-      catPtr: Option[String], numPtr: Option[String]): (Int, Int) =
-    withWriteLock(db)(withStageGuard(db) {
-      val log = logOf(db)
-      var outer = 0
-      var result: (Int, Int) = null
-      while (outer < 10 && result == null) {
-        val snap = snapshotOf(db)
-        val (small, big) = snap.files.partition(_.bytes < smallBytes)
-        if (small.size < 2) result = (0, snap.files.size) // nothing to merge
-        else {
-          val paths = small.map(f => dbPath(db).resolve(f.name).toString)
-          val rows = spark.read.schema(schema).parquet(paths: _*)
-          val totalBytes = small.map(_.bytes).sum
-          val partitions = math.max(1, (totalBytes / (128L << 20)).toInt)
-          val sized =
-            if (partitions == 1) rows.coalesce(1)
-            else rows.repartitionByRange(partitions, col("ts"))
-          val staged = stage(db, sized.sortWithinPartitions("ts"),
-            catPtr.toSeq, numPtr.toSeq)
-          var committed = false
-          var aborted = false
-          while (!committed && !aborted) {
-            val current = log.snapshot()
-            log.commitsSinceExact(snap.version) match {
-              case Some(since) if since.forall(_.kind == "append") =>
-                val appended = since.flatMap(_.files)
-                committed = log.tryCommit(CommitLog.Manifest(
-                  current.version + 1, "replace",
-                  big ++ staged ++ appended,
-                  seqHi = current.lastSeq,
-                  // verbatim copy: cleanliness is whatever it was,
-                  // and any rebased append dirties it as usual
-                  clean = snap.clean && appended.isEmpty))
-              case _ => aborted = true
-            }
-          }
-          if (committed) {
-            log.checkpointMaybe(log.snapshot())
-            result = (small.size, big.size)
-          } else unstage(db, staged)
-        }
-        outer += 1
+      catPtr: Option[String], numPtr: Option[String]): (Int, Int) = {
+    val merged = commitWrite(db, "compactSmall") { snap =>
+      val (small, big) = snap.files.partition(_.bytes < smallBytes)
+      if (small.size < 2) CommitLog.NoChange((0, snap.files.size)) // nothing to merge
+      else {
+        val paths = small.map(f => dbPath(db).resolve(f.name).toString)
+        val rows = spark.read.schema(schema).parquet(paths: _*)
+        val totalBytes = small.map(_.bytes).sum
+        val partitions = math.max(1, (totalBytes / (128L << 20)).toInt)
+        val sized =
+          if (partitions == 1) rows.coalesce(1)
+          else rows.repartitionByRange(partitions, col("ts"))
+        val staged = stage(db, sized.sortWithinPartitions("ts"),
+          catPtr.toSeq, numPtr.toSeq)
+        // verbatim copy: cleanliness is whatever it was, and any
+        // rebased append dirties it as usual
+        CommitLog.Staged("replace", staged, snap.lastSeq, snap.clean,
+          (small.size, big.size), keep = big)
       }
-      if (result == null) throw new IllegalStateException(
-        s"compactSmall of $db lost $outer races to concurrent rewrites")
-      stat(db).compacts.increment()
-      result
-    })
+    }
+    stat(db).compacts.increment()
+    merged
+  }
 
   /** Copy-compact as a `replace` commit; returns (rows read, rows
    * written). The transformed input is cached across its two passes
@@ -1137,75 +1060,44 @@ class SeriesStore(spark: SparkSession, root: String) {
    * series.
    *
    * Concurrency: the rewrite is computed against one snapshot and
-   * committed optimistically. Appends that land in between are
-   * REBASED — they join the replace manifest's file set (dirty, so
-   * read-side dedup still applies) rather than being lost or delayed.
-   * A concurrent replace aborts this attempt and recomputes from the
-   * new state (the standard table-format conflict rule: append vs
-   * replace commutes, replace vs replace does not). */
+   * committed through [[CommitLog.commit]]: appends that land in
+   * between are rebased into it, a concurrent replace makes it
+   * recompute from the new state. */
   private def rewrite(db: String, xform: DataFrame => DataFrame,
       countBase: Boolean, catPtrs: Seq[String] = Nil,
       rowsPerFile: Long = 4000000L,
-      numPtrs: Seq[String] = Nil): (Long, Long) = withStageGuard(db) {
-    val log = logOf(db)
-    var outer = 0
-    var result: (Long, Long) = null
-    while (outer < 10 && result == null) {
-      val snap = snapshotOf(db)
-      val base = frameOf(db, snap)
-      // the base count is an extra full-table pass (incl. the dedup
-      // shuffle on dirty snapshots): only deleteRange's deleted-row
-      // arithmetic needs it, compaction must not pay for it
-      val before = if (countBase) base.count() else -1L
-      val cached = xform(base)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = cached.count()
-        val partitions = math.max(1, (n / rowsPerFile).toInt)
-        // declared category → cluster files by (category, ts) so the
-        // manifest's per-file category sets come out narrow; declared
-        // numeric column → cluster by (value, ts) so per-file min/max
-        // bands come out tight (the quality-band read's layout); plain
-        // compact keeps the ts-only layout (tight time pruning)
-        // COMPOUND clustering: every declared categorical pointer,
-        // then every numeric pointer, then ts — files come out narrow
-        // on ALL declared axes at once, which is what makes the
-        // multi-pointer manifest prune ([[frameMulti]]) effective
-        val rangeCols =
-          catPtrs.map(SeriesStore.catValueCol) ++
-          numPtrs.map(SeriesStore.numValueCol) ++ Seq(col("ts"))
-        val sized =
-          if (partitions == 1) cached.coalesce(1)
-          else cached.repartitionByRange(partitions, rangeCols: _*)
-        val staged = stage(db,
-          sized.sortWithinPartitions(rangeCols: _*), catPtrs, numPtrs)
-        var committed = false
-        var aborted = false
-        while (!committed && !aborted) {
-          val current = log.snapshot()
-          // STRICT window: if log pruning removed part of it (≥2
-          // checkpoints landed mid-rewrite), rebasing from what's left
-          // would silently drop the pruned appends — abort and
-          // recompute from the fresh snapshot instead
-          log.commitsSinceExact(snap.version) match {
-            case Some(since) if since.forall(_.kind == "append") =>
-              val appended = since.flatMap(_.files)
-              committed = log.tryCommit(CommitLog.Manifest(
-                current.version + 1, "replace", staged ++ appended,
-                seqHi = current.lastSeq, clean = appended.isEmpty))
-            case _ => aborted = true
-          }
-        }
-        if (committed) {
-          log.checkpointMaybe(log.snapshot())
-          result = (before, n)
-        } else unstage(db, staged)
-      } finally cached.unpersist()
-      outer += 1
-    }
-    if (result == null) throw new IllegalStateException(
-      s"rewrite of $db lost $outer races to concurrent rewrites")
-    result
+      numPtrs: Seq[String] = Nil): (Long, Long) = commitWrite(db, "rewrite") { snap =>
+    val base = frameOf(db, snap)
+    // the base count is an extra full-table pass (incl. the dedup
+    // shuffle on dirty snapshots): only deleteRange's deleted-row
+    // arithmetic needs it, compaction must not pay for it
+    val before = if (countBase) base.count() else -1L
+    val cached = xform(base)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = cached.count()
+      val partitions = math.max(1, (n / rowsPerFile).toInt)
+      // declared category → cluster files by (category, ts) so the
+      // manifest's per-file category sets come out narrow; declared
+      // numeric column → cluster by (value, ts) so per-file min/max
+      // bands come out tight (the quality-band read's layout); plain
+      // compact keeps the ts-only layout (tight time pruning)
+      // COMPOUND clustering: every declared categorical pointer,
+      // then every numeric pointer, then ts — files come out narrow
+      // on ALL declared axes at once, which is what makes the
+      // multi-pointer manifest prune ([[frameMulti]]) effective
+      val rangeCols =
+        catPtrs.map(SeriesStore.catValueCol) ++
+        numPtrs.map(SeriesStore.numValueCol) ++ Seq(col("ts"))
+      val sized =
+        if (partitions == 1) cached.coalesce(1)
+        else cached.repartitionByRange(partitions, rangeCols: _*)
+      val staged = stage(db,
+        sized.sortWithinPartitions(rangeCols: _*), catPtrs, numPtrs)
+      // the rewrite is duplicate-free; rebased appends dirty it
+      CommitLog.Staged("replace", staged, snap.lastSeq, clean = true,
+        (before, n))
+    } finally cached.unpersist()
   }
 
   /** GET /{db}/_query — the analytical path (SeriesEngine). */
@@ -1463,4 +1355,21 @@ object SeriesStore {
       snap: CommitLog.Snapshot): Seq[CommitLog.FileEntry] =
     entries.filter(e => !snap.adopted.contains(e.name) &&
       Files.isRegularFile(dir.resolve(e.name)))
+
+  /** Adoption's commit attempt ([[SeriesStore.ensureMigrated]]): the
+   * adoptable set is re-derived against EACH snapshot, so a lost race
+   * never re-commits what the winner already referenced. Clean (a
+   * `replace`) only when the marker says so and nothing else landed
+   * first: with a concurrent append in the snapshot, the union needs
+   * the read-side dedup regardless of the marker. No cleanup: the
+   * "staged" files are the user's legacy files. */
+  private[sources] def adoption(dir: Path, entries: Seq[CommitLog.FileEntry],
+      maxSeq: Long, markerClean: Boolean)(
+      snap: CommitLog.Snapshot): CommitLog.Attempt[Unit] = {
+    val fresh = adoptable(dir, entries, snap)
+    val asClean = markerClean && snap.files.isEmpty
+    if (fresh.isEmpty) CommitLog.NoChange(()) // all adopted elsewhere
+    else CommitLog.Staged(if (asClean) "replace" else "append", fresh,
+      maxSeq, asClean, ())
+  }
 }

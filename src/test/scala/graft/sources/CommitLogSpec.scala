@@ -203,4 +203,121 @@ class CommitLogSpec extends AnyFunSuite {
     assert(log.commitsSince(3).map(_.v) == Seq(4, 5))
     assert(log.commitsSince(5).isEmpty)
   }
+
+  test("readers never see a partly written manifest while a writer commits") {
+    val (_, log) = fresh()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val readers = (0 until 3).map(_ => new Thread(() =>
+      while (!stop.get()) {
+        try { log.snapshot(); reads.incrementAndGet() }
+        catch { case e: Throwable => errs.add(e) }
+      }))
+    readers.foreach(_.start())
+    try (2 to 501).foreach { v =>
+      assert(log.tryCommit(Manifest(v, "append", Seq(fe(s"f$v.parquet")),
+        seqHi = v, clean = false)))
+      log.checkpointMaybe(log.snapshot())
+    } finally { stop.set(true); readers.foreach(_.join(60000)) }
+    val failed = errs.size
+    assert(failed == 0, s"$failed of ${reads.get + failed} reads threw: ${errs.peek()}")
+    assert(reads.get > 0)
+    assert(log.snapshot().files.size == 500)
+  }
+
+  private def logNames(dir: Path): Seq[String] = {
+    val s = Files.list(dir.resolve("_log"))
+    try {
+      val it = s.iterator(); val b = Seq.newBuilder[String]
+      while (it.hasNext) b += it.next().getFileName.toString
+      b.result().sorted
+    } finally s.close()
+  }
+
+  test("publishing leaves no temp files; prune sweeps stale leftovers") {
+    val (dir, log) = fresh()
+    assert(!log.tryCommit(Manifest(1, "append", Seq(), 0, clean = false)))
+    // a writer that died between writing and linking its manifest
+    val stale = dir.resolve("_log").resolve(".commit-dead")
+    val young = dir.resolve("_log").resolve(".commit-live")
+    Seq(stale, young).foreach(Files.write(_, "{".getBytes("UTF-8")))
+    Files.setLastModifiedTime(stale, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() - TmpGraceMs - 60000))
+    assert(log.latestVersion() == 1 && log.snapshot().version == 1)
+    (2 to 10).foreach { v =>
+      assert(log.tryCommit(Manifest(v, "append", Seq(fe(s"f$v.parquet")),
+        seqHi = v, clean = false)))
+      log.checkpointMaybe(log.snapshot())
+    }
+    assert(logNames(dir).filter(_.startsWith(".")) == Seq(".commit-live"))
+  }
+
+  private def append(log: CommitLog, files: String*): Unit = {
+    val snap = log.snapshot()
+    assert(log.tryCommit(Manifest(snap.version + 1, "append",
+      files.map(fe), seqHi = snap.lastSeq + 7, clean = false)))
+  }
+
+  test("commit: a replace that loses to appends rebases them, dirty") {
+    val (_, log) = fresh()
+    append(log, "a.parquet")
+    var attempts = 0
+    val r = log.commit("test") { snap =>
+      attempts += 1
+      append(log, "b.parquet") // lands between staging and commit
+      Staged("replace", Seq(fe("c.parquet")), snap.lastSeq, clean = true,
+        "done", keep = snap.files)
+    }
+    assert(r == "done" && attempts == 1)
+    val s = log.snapshot()
+    assert(s.files.map(_.name) == Vector("a.parquet", "c.parquet", "b.parquet"))
+    assert(!s.clean && s.lastSeq == 14)
+    assert(log.readManifest(s.version).kind == "replace")
+  }
+
+  test("commit: a replace that meets a replace, or its own files, recomputes") {
+    val (_, log) = fresh()
+    var cleanups = 0
+    var attempts = 0
+    log.commit("test") { snap =>
+      attempts += 1
+      if (attempts == 1) assert(log.tryCommit(Manifest(snap.version + 1,
+        "replace", Seq(fe("x.parquet")), 0, clean = true)))
+      Staged("replace", Seq(fe(s"r$attempts.parquet")), 0, clean = true, (),
+        cleanup = () => cleanups += 1)
+    }
+    assert(attempts == 2 && cleanups == 1)
+    assert(log.snapshot().files.map(_.name) == Vector("r2.parquet"))
+    // an append that already lists the replace's file (a concurrent
+    // adopter of the same legacy file) must not be rebased into it
+    attempts = 0
+    log.commit("test") { snap =>
+      attempts += 1
+      if (snap.adopted.contains("part-0.parquet")) NoChange(())
+      else {
+        append(log, "part-0.parquet")
+        Staged("replace", Seq(fe("part-0.parquet")), 0, clean = true, ())
+      }
+    }
+    assert(attempts == 2)
+    val refs = log.commitsSince(0).flatMap(_.files.map(_.name))
+    assert(refs.count(_ == "part-0.parquet") == 1)
+  }
+
+  test("commit: lost races hit the append and replace caps") {
+    val (_, log) = fresh()
+    for ((kind, cap) <- Seq("append" -> AppendAttempts,
+        "replace" -> ReplaceAttempts)) {
+      var attempts = 0
+      val e = intercept[IllegalStateException](log.commit(s"$kind test") { snap =>
+        attempts += 1
+        assert(log.tryCommit(Manifest(snap.version + 1, "replace", Seq(),
+          0, clean = true))) // a rival replace wins every race
+        Staged(kind, Seq(fe("z.parquet")), 0, clean = false, ())
+      })
+      assert(attempts == cap)
+      assert(e.getMessage == s"$kind test lost $cap commit races")
+    }
+  }
 }

@@ -358,4 +358,86 @@ class SeriesStoreSpec extends SparkSpec {
     val snap2 = snap0.copy(adopted = Vector("part-0.parquet", "part-1.parquet"))
     assert(SeriesStore.adoptable(dir, entries, snap2).isEmpty)
   }
+
+  // The shared commit loop's outcomes, each forced by a second store
+  // instance on the same root committing between an attempt's staging
+  // and its commit. The attempts keep the snapshot's files as their
+  // replace (a no-op compaction), so every row stays checkable.
+  private def twoStores(db: String): (SeriesStore, SeriesStore, CommitLog) = {
+    val root = Files.createTempDirectory("graft-loop").toString
+    val a = new SeriesStore(spark, root)
+    val b = new SeriesStore(spark, root)
+    a.create(db)
+    a.store(db, Some("2012-08-28T21:24:00Z"), """{"v": 1}""")
+    a.compact(db)
+    (a, b, new CommitLog(java.nio.file.Paths.get(root, db + SeriesStore.dbExt)))
+  }
+
+  test("commit loop: a replace that loses to an append keeps its rows, dirty") {
+    val (a, b, log) = twoStores("rb")
+    var attempts = 0
+    log.commit("test") { snap =>
+      attempts += 1
+      b.store("rb", Some("2012-08-28T21:24:01Z"), """{"v": 2}""")
+      CommitLog.Staged("replace", Seq(), snap.lastSeq, clean = true, (),
+        keep = snap.files)
+    }
+    assert(attempts == 1) // rebased, not staged again
+    assert(log.readManifest(log.latestVersion()).kind == "replace")
+    assert(!log.snapshot().clean)
+    assert(a.all("rb").select("doc").as[String].collect().toSeq ==
+      Seq("""{"v": 1}""", """{"v": 2}"""))
+  }
+
+  test("commit loop: a replace that loses to a replace computes again, commits once") {
+    val (a, b, log) = twoStores("rr")
+    val v0 = log.latestVersion()
+    var attempts = 0
+    var cleanups = 0
+    log.commit("test") { snap =>
+      attempts += 1
+      if (attempts == 1) b.compact("rr")
+      CommitLog.Staged("replace", Seq(), snap.lastSeq, clean = true, (),
+        keep = snap.files, cleanup = () => cleanups += 1)
+    }
+    assert(attempts == 2 && cleanups == 1)
+    assert(a.history("rr").filter(_.v > v0).map(_.kind) == Seq("replace", "replace"))
+    assert(log.snapshot().clean)
+    assert(a.info("rr").docCount == 1)
+  }
+
+  test("commit loop: a lost adoption attempt leaves every legacy part file on disk") {
+    val root = Files.createTempDirectory("graft-adopt-loss").toString
+    val p = java.nio.file.Paths.get(root, "lg" + SeriesStore.dbExt)
+    (0 until 4).map(i =>
+        (1346189000000000000L + i * 1000000000L, (i + 1).toLong, s"""{"i": $i}"""))
+      .toDF("ts", "seq", "doc").repartition(2).write.parquet(p.toString)
+    Files.createFile(p.resolve("_graft_clean"))
+    def parts = {
+      val s = Files.list(p)
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(f => f.getFileName.toString.startsWith("part-")).toSeq
+        .sortBy(_.toString)
+      finally s.close()
+    }
+    val legacy = parts
+    assert(legacy.size == 2)
+    val entries = legacy.map(SeriesStore.fileEntry)
+    val log = new CommitLog(p)
+    assert(log.init())
+    var attempts = 0
+    log.commit("test") { snap =>
+      attempts += 1
+      val attempt = SeriesStore.adoption(p, entries, 4L, markerClean = true)(snap)
+      // a second store adopts the same files before this attempt lands
+      if (attempts == 1) assert(new SeriesStore(spark, root).info("lg").docCount == 4)
+      attempt
+    }
+    assert(attempts == 2) // lost, then nothing left to adopt
+    assert(parts == legacy)
+    val s = new SeriesStore(spark, root)
+    assert(s.info("lg").docCount == 4)
+    val refs = s.history("lg").flatMap(_.files.map(_.name))
+    assert(refs.distinct.size == refs.size)
+  }
 }
