@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.{LocalSession, SampleHygiene}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // headline queries: one per operator family (series agg, series
     // rate, scan, TPC-H agg/join, window, dedup incl. transitive
     // clusters, ANN incl. IVF, text, sampling, full pipeline) — every
@@ -88,22 +79,15 @@ object Bench {
       "export_epoch_write", "dedup_substring_tokens_incremental",
       "dedup_lsh_audit_bounded", "text_redact_v2", "pack_whole_docs",
       "export_manifest_takedown")
-    // untimed warmup: run every headline plan once at the smallest SF.
-    // The generated code is scale-independent, so this charges Janino
-    // whole-stage-codegen compilation (2-5x a query's steady-state
-    // cost) and JIT warmup to the warmup phase, not the measurement —
-    // the timed runs then measure execution, which is what a cluster
-    // amortizing codegen across 1000 executors would see.
+    // untimed warmup on the smallest SF (SampleHygiene.sampleAll): the
+    // generated code is scale-independent, so the warmup pass charges
+    // codegen and JIT to itself, not to the measurement — the timed runs
+    // then measure execution, which is what a cluster amortizing codegen
+    // across 1000 executors would see.
     val warmDir = {
       val d = new java.io.File(sfDir).getParentFile
       val tiny = new java.io.File(d, "sf0.001")
       if (tiny.isDirectory) tiny.toString else sfDir
-    }
-    try spark.range(1000000).selectExpr("sum(id)").collect()
-    catch { case _: Throwable => () }
-    headline.filter(SparkEntry.queries.contains).foreach { name =>
-      try SparkEntry.queries(name)(spark, warmDir).count()
-      catch { case _: Throwable => () }
     }
     // best of three timed runs per query: local shuffles/GC add ±30%
     // run-to-run jitter at this data size, and the minimum is the
@@ -119,66 +103,19 @@ object Bench {
     // official record — the r16 driver record was ~1.36× uniformly
     // inflated by exactly the contamination this detects): before
     // each query the harness DRAINS checkpoint residue (gc + bounded
-    // ContextCleaner wait, graft.tools.SampleHygiene) and probes the
-    // bimodal buffered-write state next to the sample; samples taken
-    // slow-io or residue-laden get bounded re-runs once the state
-    // clears, and the recorded io/residue always describe whichever
-    // sample produced the STANDING min.
-    import graft.tools.SampleHygiene
-    case class R(name: String, sec: Double, threw: Boolean,
-      ioMbps: Double, residue: Long, reruns: Int)
-    def sampleQuery(name: String): SampleHygiene.Sample =
-      SampleHygiene.measure(spark, 3) {
-        SparkEntry.queries(name)(spark, sfDir).count(); ()
-      }
-    var results = headline.filter(SparkEntry.queries.contains).map { name =>
-      val s = sampleQuery(name)
-      R(name, s.sec, s.threw, s.io, s.residue, 0)
-    }
-    // bounded contaminated-sample retry: up to 2 passes over queries
-    // whose sample was taken slow-io or residue-laden; a re-run only
-    // counts when the fresh state reads clean, the min across samples
-    // stands (contamination only ever reads HIGH), and io/residue
-    // follow the standing-min sample so the JSON stays self-describing
-    def dirty(r: R): Boolean = SampleHygiene.contaminated(r.ioMbps, r.residue)
-    var pass = 0
-    while (pass < 2 && results.exists(dirty)) {
-      results = results.map { r =>
-        if (!dirty(r)) r
-        else {
-          val residue2 = SampleHygiene.drainResidue(spark)
-          val io2 = graft.tools.IoProbe.sampleMbps()
-          if (SampleHygiene.contaminated(io2, residue2)) r // state still bad
-          else {
-            val s2 = SampleHygiene.measure(spark, 3) {
-              SparkEntry.queries(r.name)(spark, sfDir).count(); ()
-            }
-            if (s2.sec <= r.sec)
-              R(r.name, s2.sec, r.threw || s2.threw, s2.io, s2.residue,
-                r.reruns + 1)
-            else // old (contaminated) sample stands: keep ITS state
-              r.copy(threw = r.threw || s2.threw, reruns = r.reruns + 1)
-          }
-        }
-      }
-      pass += 1
-    }
+    // ContextCleaner wait) and probes the bimodal buffered-write state
+    // next to the sample; samples taken slow-io or residue-laden get
+    // bounded re-runs once the state clears, and the recorded
+    // io/residue always describe whichever sample produced the
+    // STANDING min.
+    val results = SampleHygiene.sampleAll(spark,
+      headline.filter(SparkEntry.queries.contains), warmDir, sfDir)
     val ioReruns = results.map(_.reruns).sum
-    val contaminatedQs = results.collect { case r if dirty(r) =>
-      "\"" + r.name + "\"" }
-    val failed = results.collect { case r if r.threw => "\"" + r.name + "\"" }
+    val contaminatedQs = results.filter(_.contaminated)
+    val failed = SampleHygiene.jsonNames(results.filter(_.threw))
     val total = if (results.nonEmpty) results.map(_.sec).sum else 0.0
-    def line(fmt: Double => String): String = {
-      val qs = results.map(r => "\"" + r.name + "\":" + fmt(r.sec))
-        .mkString("{", ",", "}")
-      val io = results.map(r => "\"" + r.name + "\":" +
-          BigDecimal(r.ioMbps).setScale(1, BigDecimal.RoundingMode.HALF_UP))
-        .mkString("{", ",", "}")
-      val res = results.map(r => "\"" + r.name + "\":" +
-          (r.residue / (1024 * 1024)))
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"io_mbps":$io,"residue_mb":$res,"io_reruns":$ioReruns,"contaminated":${contaminatedQs.mkString("[", ",", "]")},"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
-    }
+    def line(fmt: Double => String): String =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",${SampleHygiene.jsonMaps(results, fmt)},"io_reruns":$ioReruns,"contaminated":${SampleHygiene.jsonNames(contaminatedQs)},"failed":$failed,"sf":"$sfDir"}"""
     // full-precision per-query artifact: the stdout line has been
     // truncated by log-capture tails between rounds, losing per-query
     // history — the file is the durable record
@@ -217,7 +154,7 @@ object Bench {
     // io-state summary rides the capped line: min/median probe MB/s
     // and the rerun count tell the judge whether this run's totals
     // are like-for-like without opening the full artifact
-    val ios = results.map(_.ioMbps).filter(_ >= 0).sorted
+    val ios = results.map(_.io).filter(_ >= 0).sorted
     val ioSummary =
       if (ios.isEmpty) ""
       else s""""io_mbps_min":${fmt2(ios.head)},"io_mbps_med":${fmt2(ios(ios.size / 2))},"io_reruns":$ioReruns,"contaminated_n":${contaminatedQs.size},"""
@@ -225,7 +162,7 @@ object Bench {
     // that ran and passed but did not fit the capped list — the judge
     // reads it to distinguish "fell off" from "removed"
     def tailFor(offList: Int): String =
-      s"""},"n_queries":${results.size},"n_off_list":$offList,${ioSummary}"queries_full":"target/bench.json","failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
+      s"""},"n_queries":${results.size},"n_off_list":$offList,${ioSummary}"queries_full":"target/bench.json","failed":$failed,"sf":"$sfDir"}"""
     val sb = new StringBuilder(head)
     // reserve tail space for the largest possible off-list count
     var used = head.length + tailFor(results.size).length

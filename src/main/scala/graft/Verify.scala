@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.LocalSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,16 +8,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated query names to dump (default all)
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // Gate failures must be LOUD: a broken query writes its error into
     // _failed.json and flips the exit code, so a round can never again

@@ -397,8 +397,8 @@ object Dedup {
    *     orphaned ~35% of a J≈0.9 cluster at a tiny cap
    *     (dedup_lsh_audit_bounded). Near-identical clusters resist
    *     refinement anyway (J≈0.93 copies split ~0.7× per extra row;
-   *     ProbeHotBucket r16), so the star is the load-bearing tier
-   *     there.
+   *     ProbeHotBucket r16, in git at 5b09031), so the star is the
+   *     load-bearing tier there.
    *
    * Semantics: every emitted pair is exact-verified ≥ threshold
    * (precision unchanged); output ⊆ [[minhashPairs]]' pair set, with
@@ -427,14 +427,15 @@ object Dedup {
    * hot-bucket-free corpus gets the exact path's plan instead of
    * carrying empty hot-tier stages through AQE's serialized loop
    * (~0.6-0.7 s fixed overhead per invocation at sf0.1, ProbeB3/B4
-   * r17; VERDICT r17 task 3).
+   * r17, in git at 5b09031; VERDICT r17 task 3).
    *
    * HEALTHY-CORPUS COST (r17 optimization, guide §2.3/§2.4): the deep
    * (n+32)-row signature is computed ONLY for members of oversized
    * buckets — previously every doc paid the 1.5× minhash widening and
    * the rekey join whether or not any bucket was hot, which put the
    * bounded default ~80% over the exact path on a hot-bucket-free
-   * corpus (measured 0.9 s → 1.6 s at sf0.1, ProbeBounded r17).
+   * corpus (measured 0.9 s → 1.6 s at sf0.1, ProbeBounded r17, in git
+   * at 5b09031).
    * Buckets at or under the cap verify straight off their ORIGINAL
    * band key — identical output, because refinement leaves a ≤cap
    * bucket's key unchanged (`__ext = 0` ⇒ `key2 = key`). The frames
@@ -477,12 +478,13 @@ object Dedup {
     // construction, and r17 shipped them as empty subtrees for AQE's
     // empty-relation propagation to collapse — which it did, but one
     // serialized empty stage at a time: ~0.6-0.7 s of fixed overhead
-    // per invocation at sf0.1 (ProbeB3/B4), paid by every healthy
-    // corpus. The census now runs as ONE small action here (over the
-    // lazily-checkpointed sets/sigs the main pass reuses), and a
-    // hot-bucket-free corpus gets the EXACT path's plan shape: tier
-    // 1a only, which on such a corpus is minhashPairs' bucket verify
-    // over the same multi-member buckets — output identical
+    // per invocation at sf0.1 (ProbeB3/B4, in git at 5b09031), paid by
+    // every healthy corpus. The census now runs as ONE small action
+    // here (over the lazily-checkpointed sets/sigs the main pass
+    // reuses), and a hot-bucket-free corpus gets the EXACT path's
+    // plan shape: tier 1a only, which on such a corpus is
+    // minhashPairs' bucket verify over the same multi-member
+    // buckets — output identical
     // (spec-pinned equality already states it on pre-refinement
     // buckets). Cost on a hot corpus: one extra narrow aggregate
     // read of the census checkpoint. This trades the scaladoc's old
@@ -495,8 +497,8 @@ object Dedup {
     // md5-per-shingle projection over the cached shingle frame, no
     // full-corpus block write (a full-corpus hsets checkpoint was
     // 0.6-1.4 s of the bounded path's healthy premium at sf0.1,
-    // ProbeB2 r17). The HOT tiers get their own hotIds-restricted
-    // checkpoint below.
+    // ProbeB2 r17, in git at 5b09031). The HOT tiers get their own
+    // hotIds-restricted checkpoint below.
     val smallHs = keyed
       .join(sized.filter(col("__ext") === 0)
         .select(col("band"), col("key")), Seq("band", "key"))

@@ -309,8 +309,9 @@ object Graphs {
       // barrier at all: a fixed-iteration loop has no per-round
       // driver decision, so all rounds run as ONE job DAG (measured
       // 3.10 → 2.17 s best-of-3 at sf0.1, outputs hash-identical —
-      // ProbeGraphCkpt). Integer shape mirrors the old driver math
-      // exactly: (dampingPct * (dm div n)) div 100, non-negative LONGs.
+      // ProbeGraphCkpt, in git at 5b09031). Integer shape mirrors the
+      // old driver math exactly: (dampingPct * (dm div n)) div 100,
+      // non-negative LONGs.
       val dmF = broadcast(pr.join(dangling, Seq("node"), "left_semi")
         .agg(coalesce(sum(col("pr")), lit(0L)).as("__dm")))
       val contrib = ew.join(pr.withColumnRenamed("node", "src"), "src")

@@ -272,10 +272,10 @@ object Pipeline {
    * [[Dedup.minhashPairsBounded]] (oversized buckets refine, then
    * star-cap), so a 10⁵-copy slightly-perturbed boilerplate cluster
    * costs O(k) instead of walling the pipeline at ~k²/2 verified
-   * pairs — ProbeHotBucket measured the exact path at HOURS for a
-   * k = 10⁵ cluster, a shape every web-scale crawl contains (cookie
-   * banners, parked domains), which is why the safe path is no
-   * longer opt-in. Pass `Int.MaxValue` to opt OUT into the exact
+   * pairs — ProbeHotBucket (in git at 5b09031) measured the exact
+   * path at HOURS for a k = 10⁵ cluster, a shape every web-scale
+   * crawl contains (cookie banners, parked domains), which is why the
+   * safe path is no longer opt-in. Pass `Int.MaxValue` to opt OUT into the exact
    * maximal-recall path ([[Dedup.minhashPairs]]) when the corpus is
    * known hot-bucket-free. Drop/cluster decisions are unchanged
    * wherever no (band, key) bucket exceeds the cap before refinement

@@ -442,71 +442,35 @@ object CommitLog {
   object Snapshot {
     def fromJson(s: String): Snapshot = {
       val n = graft.functions.JsonPointersExpr.mapper.readTree(s)
-      val adopted =
-        if (n.has("adopted")) {
-          val b = Vector.newBuilder[String]
-          val it = n.get("adopted").elements()
-          while (it.hasNext) b += it.next().asText()
-          b.result()
-        } else Vector[String]()
-      Snapshot(n.get("v").asLong(), fileEntries(n).toVector,
+      Snapshot(n.get("v").asLong(), fileEntries(n),
         n.get("clean").asBoolean(), n.get("lastSeq").asLong(),
-        if (n.has("uid")) n.get("uid").asText() else "", adopted)
+        if (n.has("uid")) n.get("uid").asText() else "",
+        opt(n, "adopted")(strings).getOrElse(Vector()))
     }
   }
 
-  private def fileEntries(n: JsonNode): Vector[FileEntry] = {
-    val arr = n.get("files")
-    val b = Vector.newBuilder[FileEntry]
-    val it = arr.elements()
-    while (it.hasNext) {
-      val e = it.next()
-      val cats =
-        if (e.has("cats")) {
-          val cb = Vector.newBuilder[String]
-          val cit = e.get("cats").elements()
-          while (cit.hasNext) cb += cit.next().asText()
-          Some(cb.result())
-        } else None
-      val num =
-        if (e.has("num")) {
-          val nb = Vector.newBuilder[Double]
-          val nit = e.get("num").elements()
-          while (nit.hasNext) nb += nit.next().asDouble()
-          Some(nb.result())
-        } else None
-      val catsBy =
-        if (e.has("catsBy")) {
-          val mb = Map.newBuilder[String, Vector[String]]
-          val fit = e.get("catsBy").fields()
-          while (fit.hasNext) {
-            val f = fit.next()
-            val cb = Vector.newBuilder[String]
-            val cit = f.getValue.elements()
-            while (cit.hasNext) cb += cit.next().asText()
-            mb += (f.getKey -> cb.result())
-          }
-          Some(mb.result())
-        } else None
-      val numBy =
-        if (e.has("numBy")) {
-          val mb = Map.newBuilder[String, Vector[Double]]
-          val fit = e.get("numBy").fields()
-          while (fit.hasNext) {
-            val f = fit.next()
-            val nb = Vector.newBuilder[Double]
-            val nit = f.getValue.elements()
-            while (nit.hasNext) nb += nit.next().asDouble()
-            mb += (f.getKey -> nb.result())
-          }
-          Some(mb.result())
-        } else None
-      b += FileEntry(e.get("f").asText(), e.get("bytes").asLong(),
-        if (e.has("min")) e.get("min").asLong() else 0L,
-        if (e.has("max")) e.get("max").asLong() else 0L,
-        if (e.has("rows")) e.get("rows").asLong() else -1L,
-        cats, num, catsBy, numBy)
-    }
-    b.result()
-  }
+  private def strings(a: JsonNode): Vector[String] =
+    a.iterator().asScala.map(_.asText()).toVector
+
+  private def doubles(a: JsonNode): Vector[Double] =
+    a.iterator().asScala.map(_.asDouble()).toVector
+
+  /** `field` of `e` read by `read`, or None when absent. */
+  private def opt[A](e: JsonNode, field: String)(read: JsonNode => A): Option[A] =
+    Option(e.get(field)).map(read)
+
+  /** An object of arrays, each array read by `read`. */
+  private def byPointer[A](o: JsonNode)(read: JsonNode => A): Map[String, A] =
+    o.properties().asScala.iterator.map(f => f.getKey -> read(f.getValue)).toMap
+
+  private def fileEntries(n: JsonNode): Vector[FileEntry] =
+    n.get("files").iterator().asScala.map { e =>
+      FileEntry(e.get("f").asText(), e.get("bytes").asLong(),
+        opt(e, "min")(_.asLong()).getOrElse(0L),
+        opt(e, "max")(_.asLong()).getOrElse(0L),
+        opt(e, "rows")(_.asLong()).getOrElse(-1L),
+        opt(e, "cats")(strings), opt(e, "num")(doubles),
+        opt(e, "catsBy")(byPointer(_)(strings)),
+        opt(e, "numBy")(byPointer(_)(doubles)))
+    }.toVector
 }

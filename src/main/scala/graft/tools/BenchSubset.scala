@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Scale-probe bench: time a comma-separated subset of the
  * [[graft.SparkEntry.queries]] registry against an arbitrary SF
@@ -10,9 +8,9 @@ import org.apache.spark.sql.SparkSession
  * headline set would take too long per data point.
  *
  * Usage: `runMain graft.tools.BenchSubset <sfDir> <name1,name2,...>`
- * Prints one `BENCHSUBSET <name> <best-of-3 sec>` line per query
- * (warmup pass on sf0.001 charges codegen to the warmup, mirroring
- * [[graft.Bench]]).
+ * Prints one `BENCHSUBSET <name> <best-of-3 sec>` line per query.
+ * Every query is warmed on sf0.001 before any is timed, which charges
+ * codegen to the warmup, as in [[graft.Bench]].
  *
  * SAMPLE HYGIENE, automated (the r14/r15 floors were hand-filtered):
  * two contamination modes get detected and re-run in-harness —
@@ -26,12 +24,12 @@ import org.apache.spark.sql.SparkSession
  *    of MB of standing blocks reads up to 1.5× high (BASELINE items
  *    23/29). Before each query the harness DRAINS (gc + bounded
  *    cleaner wait) until executor storage memory falls under
- *    [[ResidueBytes]]; a sample that still timed over the threshold
- *    is flagged and re-run after a final drain. The shared gate
+ *    [[SampleHygiene.ResidueBytes]]; a sample that still timed over
+ *    the threshold is flagged and re-run after a final drain. The shared gate
  *    caches (clusters/verdicts frames) are deliberately small and
  *    sit below the threshold — draining never evicts them.
  *
- * As of r17 the detection/drain mechanics live in [[SampleHygiene]],
+ * The warmup, sampling and retry loop is [[SampleHygiene.sampleAll]],
  * shared with the official [[graft.Bench]] main; this tool remains
  * the arbitrary-SF / arbitrary-subset floors harness. The recorded
  * io/residue always describe whichever sample produced the STANDING
@@ -39,9 +37,6 @@ import org.apache.spark.sql.SparkSession
  * sample stops describing the recorded time).
  */
 object BenchSubset {
-
-  /** See [[SampleHygiene.ResidueBytes]]. */
-  val ResidueBytes: Long = SampleHygiene.ResidueBytes
 
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
@@ -53,94 +48,31 @@ object BenchSubset {
     val (names, unknown) = args(1).split(",").toSeq
       .partition(graft.SparkEntry.queries.contains)
     unknown.foreach(n => System.err.println(s"[benchsubset] unknown query: $n"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup on the smallest available SF, derived like graft.Bench:
-    // the codegen cost (2-5× steady-state) must bill the warmup pass,
-    // and a hardcoded path would silently skip warmup on other roots
+    val spark = LocalSession()
+    // warmup on the smallest available SF: the codegen cost (2-5×
+    // steady-state) must bill the warmup pass, not the sample
     val warmDir = {
       val tiny = new java.io.File("/root/testdata/sf0.001")
       if (tiny.isDirectory) tiny.toString else dir
     }
-    case class R(name: String, sec: Double, threw: Boolean, io: Double,
-      residue: Long, reruns: Int)
-    def sampleQuery(name: String): SampleHygiene.Sample =
-      SampleHygiene.measure(spark, 3) {
-        graft.SparkEntry.queries(name)(spark, dir).count(); ()
-      }
-    var results = names.map { name =>
-      val fn = graft.SparkEntry.queries(name)
-      try fn(spark, warmDir).count()
-      catch { case _: Throwable => () }
-      // SampleHygiene.measure drains residue BEFORE sampling (earlier
-      // queries' checkpoint blocks must not bill this one) and probes
-      // the io state next to the measurement
-      val s = sampleQuery(name)
-      R(name, s.sec, s.threw, s.io, s.residue, 0)
-    }
-    // bounded contaminated-sample retry: re-run queries whose sample
-    // was taken in a slow-io OR residue-laden state, once the state
-    // clears; the min across samples stands (a contaminated sample
-    // only ever reads HIGH) and io/residue follow the standing-min
-    // sample so the emitted JSON stays self-describing
-    def contaminated(r: R): Boolean =
-      SampleHygiene.contaminated(r.io, r.residue)
-    var pass = 0
-    while (pass < 2 && results.exists(contaminated)) {
-      results = results.map { r =>
-        if (!contaminated(r)) r
-        else {
-          val residue2 = SampleHygiene.drainResidue(spark)
-          val io2 = IoProbe.sampleMbps()
-          if (SampleHygiene.contaminated(io2, residue2)) r // still bad
-          else {
-            val s2 = sampleQuery(r.name)
-            if (s2.sec <= r.sec)
-              R(r.name, s2.sec, r.threw || s2.threw, s2.io, s2.residue,
-                r.reruns + 1)
-            else // old (contaminated) sample stands: keep ITS state
-              r.copy(threw = r.threw || s2.threw, reruns = r.reruns + 1)
-          }
-        }
-      }
-      pass += 1
-    }
+    val results = SampleHygiene.sampleAll(spark, names, warmDir, dir)
     results.foreach { r =>
       val flag = if (r.threw) " FAILED" else ""
       val slow = if (r.io >= 0 && r.io < IoProbe.SlowMbps) " SLOW-IO" else ""
-      val res = if (r.residue > ResidueBytes)
+      val res = if (r.residue > SampleHygiene.ResidueBytes)
         f" RESIDUE=${r.residue / (1024 * 1024)}%dMB" else ""
       val rr = if (r.reruns > 0) s" reruns=${r.reruns}" else ""
       println(f"BENCHSUBSET ${r.name} ${r.sec}%.2f io=${r.io}%.0fMB/s$flag$slow$res$rr")
     }
     // durable machine-readable record, same shape as Bench's
     // target/bench.json (per-probe history survives log truncation)
-    val qs = results.map(r => "\"" + r.name + "\":" + r.sec)
-      .mkString("{", ",", "}")
-    val io = results.map(r =>
-        "\"" + r.name + "\":" + BigDecimal(r.io).setScale(1,
-          BigDecimal.RoundingMode.HALF_UP))
-      .mkString("{", ",", "}")
-    val res = results.map(r =>
-        "\"" + r.name + "\":" + (r.residue / (1024 * 1024)))
-      .mkString("{", ",", "}")
-    val failed = results.collect { case r if r.threw => "\"" + r.name + "\"" }
-      .mkString("[", ",", "]")
-    val dirty = results.collect { case r if contaminated(r) =>
-      "\"" + r.name + "\"" }.mkString("[", ",", "]")
+    val failed = SampleHygiene.jsonNames(results.filter(_.threw))
+    val dirty = SampleHygiene.jsonNames(results.filter(_.contaminated))
     val reruns = results.map(_.reruns).sum
     val out = java.nio.file.Paths.get("target/bench-subset.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out,
-      (s"""{"queries":$qs,"io_mbps":$io,"residue_mb":$res,"failed":$failed,""" +
+      (s"""{${SampleHygiene.jsonMaps(results, _.toString)},"failed":$failed,""" +
         s""""contaminated":$dirty,"state_reruns":$reruns,"sf":"$dir"}""" +
         "\n").getBytes("UTF-8"))
     spark.stop()

@@ -1,20 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract smoke: SparkEntry.entry must return rows > 0 on
  * sf0.001 (the driver's own check) — run it locally so a contract
  * break surfaces before the round gate does. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val n = graft.SparkEntry.entry(spark).count()
     println(s"ENTRY rows=$n")
     require(n > 0, "entry returned no rows")

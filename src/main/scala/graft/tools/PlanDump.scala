@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Writes `.explain("formatted")` for named registry queries into
@@ -16,16 +15,7 @@ object PlanDump {
       if (args.length < 4 || args(3) == "all")
         graft.SparkEntry.queries.keys.toSeq.sorted
       else args(3).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val outDir = Paths.get(s"plans/$tag")
     Files.createDirectories(outDir)
     names.foreach { n =>

@@ -22,20 +22,20 @@ import org.apache.spark.sql.SparkSession
  * this runtime: broadcast-block removals never decrement it, so over a
  * 190-query suite it climbs monotonically (measured 126 → 970 MB while
  * `getPersistentRDDs` was EMPTY and a 30 s gc loop reclaimed nothing,
- * ProbeResidue r17). Under that metric the whole r17 baseline run read
- * permanently contaminated: 178/191 queries flagged, every retry
- * gated off ("state still bad"), and the drain loops added ~25 min of
- * pure sleep to the bench wall-clock. The metric is now the live
+ * ProbeResidue r17, in git at 5b09031). Under that metric the whole
+ * r17 baseline run read permanently contaminated: 178/191 queries
+ * flagged, every retry gated off ("state still bad"), and the drain
+ * loops added ~25 min of pure sleep to the bench wall-clock. The metric is now the live
  * cached-RDD bytes (`getRDDStorageInfo`), which RDD unpersists do
  * decrement, and residue is the DELTA above the smallest level ever
  * observed this session (the intentional standing caches — shared
  * cluster/verdict frames — are a floor, not contamination).
  *
- * Used by both the official [[graft.Bench]] full-suite main and the
- * [[BenchSubset]] floors tool, so the driver's per-round record and
- * the BASELINE floor runs carry the same discipline (the r16 driver
- * record was ~1.36× uniformly inflated precisely because this lived
- * only in BenchSubset).
+ * Both the official [[graft.Bench]] full-suite main and the
+ * [[BenchSubset]] floors tool time through [[sampleAll]], so the
+ * official per-round record and the BASELINE floor runs carry the
+ * same discipline (the r16 official record was ~1.36× uniformly
+ * inflated precisely because this lived only in BenchSubset).
  */
 object SampleHygiene {
 
@@ -137,4 +137,76 @@ object SampleHygiene {
       else math.min(ioPre, ioPost)
     Sample(if (times.nonEmpty) times.min else 999.0, threw, io, residue)
   }
+
+  /** A query's standing sample: its min seconds, whether any run threw,
+   * the io/residue state of the sample that produced the min, and how
+   * many contaminated-sample re-runs it got. */
+  final case class Result(name: String, sec: Double, threw: Boolean,
+      io: Double, residue: Long, reruns: Int) {
+    def contaminated: Boolean = SampleHygiene.contaminated(io, residue)
+  }
+
+  /** The bench sampling loop. Untimed warmup first: every query runs
+   * once on `warmDir` (the smallest SF), which charges Janino
+   * whole-stage-codegen compilation (2-5x a query's steady-state cost)
+   * and JIT warmup to the warmup, not the measurement. Then each query,
+   * in order, is timed on `dataDir` by [[measure]] (best of 3 `count()`
+   * runs). Last comes the bounded contaminated-sample retry: up to 2
+   * passes over queries whose sample was taken slow-io or
+   * residue-laden. A re-run only counts when the fresh state reads
+   * clean, the min across samples stands (contamination only ever
+   * reads HIGH), and io/residue follow the standing-min sample so the
+   * JSON stays self-describing. */
+  def sampleAll(spark: SparkSession, names: Seq[String], warmDir: String,
+      dataDir: String): Seq[Result] = {
+    def run(name: String, dir: String): Unit = {
+      graft.SparkEntry.queries(name)(spark, dir).count(); ()
+    }
+    try spark.range(1000000).selectExpr("sum(id)").collect()
+    catch { case _: Throwable => () }
+    names.foreach { name =>
+      try run(name, warmDir)
+      catch { case _: Throwable => () }
+    }
+    var results = names.map { name =>
+      val s = measure(spark, 3)(run(name, dataDir))
+      Result(name, s.sec, s.threw, s.io, s.residue, 0)
+    }
+    var pass = 0
+    while (pass < 2 && results.exists(_.contaminated)) {
+      results = results.map { r =>
+        if (!r.contaminated) r
+        else {
+          val residue2 = drainResidue(spark)
+          val io2 = IoProbe.sampleMbps()
+          if (contaminated(io2, residue2)) r // state still bad
+          else {
+            val s2 = measure(spark, 3)(run(r.name, dataDir))
+            if (s2.sec <= r.sec)
+              Result(r.name, s2.sec, r.threw || s2.threw, s2.io, s2.residue,
+                r.reruns + 1)
+            else // old (contaminated) sample stands: keep ITS state
+              r.copy(threw = r.threw || s2.threw, reruns = r.reruns + 1)
+          }
+        }
+      }
+      pass += 1
+    }
+    results
+  }
+
+  /** `"queries":{..},"io_mbps":{..},"residue_mb":{..}` over `results`,
+   * seconds written by `fmt`: the per-query maps of both benches' JSON
+   * records. */
+  def jsonMaps(results: Seq[Result], fmt: Double => String): String = {
+    def map(value: Result => Any): String =
+      results.map(r => "\"" + r.name + "\":" + value(r)).mkString("{", ",", "}")
+    val io = map(r => BigDecimal(r.io).setScale(1, BigDecimal.RoundingMode.HALF_UP))
+    val residue = map(r => r.residue / (1024 * 1024))
+    s""""queries":${map(r => fmt(r.sec))},"io_mbps":$io,"residue_mb":$residue"""
+  }
+
+  /** JSON array of the quoted names of `results`, in order. */
+  def jsonNames(results: Seq[Result]): String =
+    results.map(r => "\"" + r.name + "\"").mkString("[", ",", "]")
 }

@@ -50,14 +50,7 @@ object ScaleGen {
     val factor = if (args.length > 2) args(2).toInt else 10
     val files = if (args.length > 3) args(3).toInt else 32
     val textMode = if (args.length > 4) args(4) else "unique"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     generate(spark, src, out, factor, files, textMode)
     spark.stop()
   }

@@ -2,31 +2,17 @@ package graft.tools
 
 import graft.functions.JsonPointersExpr
 import graft.sources.SeriesStore
-import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths}
 
-/**
+/*
  * CLI equivalents of the reference's `tools/` directory (SURVEY §2.1
  * S12): dump = `tools/dump` (JSON-lines per database), load =
  * `tools/load` (replay a dump, optional `-min` ts filter), compact =
  * `tools/compact`, info = `tools/serieslyinfo`. All are thin wrappers
- * over the store API the batch gates verify — run via
- * `runMain graft.tools.<Tool> <store-root> <db> [...]`.
+ * over the store API the batch gates verify, on a LocalSession —
+ * run via `runMain graft.tools.<Tool> <store-root> <db> [...]`.
  */
-private object ToolSession {
-  def spark(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-}
 
 /** `Dump <root> <db> [outFile]` — stream the database as JSON lines
  * (`{"<canonical key>": <doc>}` per line, ts-ascending). The outFile
@@ -66,7 +52,7 @@ object Dump {
   }
 
   def main(args: Array[String]): Unit = {
-    val store = new SeriesStore(ToolSession.spark(), args(0))
+    val store = new SeriesStore(LocalSession(), args(0))
     val lines = store.dump(args(1))
     if (args.length > 2) {
       val out = formatName(args(2), args(1), java.time.LocalDateTime.now())
@@ -137,7 +123,7 @@ object Sample {
  * line; a batch append is the same visible end state). */
 object Load {
   def main(args: Array[String]): Unit = {
-    val spark = ToolSession.spark()
+    val spark = LocalSession()
     val store = new SeriesStore(spark, args(0))
     store.create(args(1))
     val minNs = if (args.length > 3)
@@ -187,7 +173,7 @@ object Load {
  * grace window can still reference. */
 object Compact {
   def main(args: Array[String]): Unit = {
-    val store = new SeriesStore(ToolSession.spark(), args(0))
+    val store = new SeriesStore(LocalSession(), args(0))
     store.compact(args(1))
     val removed = vacuumWithGrace(store, args)
     println(s"compacted ${args(1)}; vacuumed $removed stale files")
@@ -201,7 +187,7 @@ object Compact {
  * cost tracks small-file volume, not table size). */
 object CompactSmall {
   def main(args: Array[String]): Unit = {
-    val store = new SeriesStore(ToolSession.spark(), args(0))
+    val store = new SeriesStore(LocalSession(), args(0))
     val small = args.lift(2).map(_.toLong).getOrElse(32L << 20)
     val (merged, kept) = store.compactSmall(args(1), small)
     val removed = args.lift(3).map(_.toLong)
@@ -224,7 +210,7 @@ private object vacuumWithGrace {
  * snapshots). */
 object Vacuum {
   def main(args: Array[String]): Unit = {
-    val store = new SeriesStore(ToolSession.spark(), args(0))
+    val store = new SeriesStore(LocalSession(), args(0))
     println(s"vacuumed ${vacuumWithGrace(store, args)} stale files from ${args(1)}")
   }
 }
@@ -233,7 +219,7 @@ object Vacuum {
  * per database (all databases when none named). */
 object Info {
   def main(args: Array[String]): Unit = {
-    val store = new SeriesStore(ToolSession.spark(), args(0))
+    val store = new SeriesStore(LocalSession(), args(0))
     val dbs = if (args.length > 1) args.drop(1).toSeq else store.list()
     dbs.foreach { db =>
       val i = store.info(db)

@@ -3,6 +3,7 @@ package graft.tools
 import graft.SparkSpec
 import graft.sources.SeriesStore
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class ToolsSpec extends SparkSpec {
   import spark.implicits._
@@ -40,16 +41,19 @@ class ToolsSpec extends SparkSpec {
     s.storeBatch("db", Seq((1346189000L * 1000000000L, """{"v": 1}"""),
       (1346189010L * 1000000000L, """{"v": 2}""")).toDF("ts", "doc"))
     Compact.main(Array(root, "db", "-1000")) // negative grace: sweep now
-    def dataFiles = {
+    def dataFiles: Set[String] = {
       val dir = java.nio.file.Paths.get(root, "db" + SeriesStore.dbExt)
       val st = Files.list(dir)
-      try st.filter(p => p.getFileName.toString.endsWith(".parquet")).count()
+      try st.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).toSet
       finally st.close()
     }
-    assert(dataFiles == 1) // exactly the compacted file survives
+    val compacted = dataFiles
+    assert(compacted.size == 1) // exactly the compacted file survives
     assert(s.info("db").docCount == 2)
-    assert(Vacuum.main(Array(root, "db", "-1000")) == (())) // idempotent
-    assert(dataFiles == 1)
+    Vacuum.main(Array(root, "db", "-1000")) // idempotent: nothing left to sweep
+    assert(dataFiles == compacted)
+    assert(s.info("db").docCount == 2)
   }
 
   test("gzipped dump round-trips through load (reference dumps always gzip)") {
