@@ -84,11 +84,7 @@ object Bench {
     // codegen and JIT to itself, not to the measurement — the timed runs
     // then measure execution, which is what a cluster amortizing codegen
     // across 1000 executors would see.
-    val warmDir = {
-      val d = new java.io.File(sfDir).getParentFile
-      val tiny = new java.io.File(d, "sf0.001")
-      if (tiny.isDirectory) tiny.toString else sfDir
-    }
+    val warmDir = SampleHygiene.warmDir(sfDir)
     // best of three timed runs per query: local shuffles/GC add ±30%
     // run-to-run jitter at this data size, and the minimum is the
     // stable estimator of the plan's actual cost (best-of-2 left

@@ -29,7 +29,13 @@ import org.apache.spark.sql.types.DoubleType
  * Plan shape (one shuffle for the group-by; Catalyst pushes the ts
  * range to the parquet scan and prunes columns):
  *   scan → range filter → single-parse pointer projection →
- *   groupBy(bucket) agg(N masked exprs) [⟕ rate-pass agg] → sort.
+ *   groupBy(bucket) agg(N masked exprs) [⟕ rate-pass agg] →
+ *   single-partition sort.
+ * The bucket rows are few (AQE already coalesces the aggregate to one
+ * partition below its advisory size) and a response drains them
+ * serially, so the output is `coalesce(1).sortWithinPartitions`, not a
+ * global `orderBy`, whose range exchange costs a sampling job and a
+ * second shuffle: a non-rate query runs as two jobs, not four.
  *
  * Scale notes: the rate reducers (`c*`) need a total order over the
  * series (reference: query.go:358-405 is a sequential fold). Rather
@@ -110,7 +116,8 @@ object SeriesEngine {
 
   /** Runs the query; output is one row per bucket that contains ≥1
    * in-range document (pre-filter, as in the reference — query.go:264-289):
-   * `bucket_ms` LONG plus one column per reducer, ordered by bucket.
+   * `bucket_ms` LONG plus one column per reducer, ordered by bucket in
+   * a single partition.
    *
    * `partitionBy` runs the query independently per series key (one
    * seriesly database = one series; a keyed table holds many): the
@@ -172,10 +179,13 @@ object SeriesEngine {
     val outCols = named.map { case (_, red, name) =>
       normalizeOut(red, col(name)).as(name)
     }
+    // (parts, bucket_ms) is unique per row: the same order as a global
+    // sort, without its range exchange (see "Plan shape" above)
     result
       .select(parts ++
         (graft.functions.ldiv(col("__bucket"), 1000000L).as("bucket_ms") +: outCols): _*)
-      .orderBy(parts :+ col("bucket_ms"): _*)
+      .coalesce(1)
+      .sortWithinPartitions(parts :+ col("bucket_ms"): _*)
   }
 
   /** NaN/±Inf → null at the result edge; empty sums ⇒ 0.0

@@ -966,9 +966,12 @@ class SeriesStore(spark: SparkSession, root: String) {
    * analog of the time-subrange walk. Tradeoff made explicit: ts
    * ranges then interleave ACROSS categories, so pure-time pruning
    * coarsens to per-category file runs — declare the column the
-   * table is actually read by. `rowsPerFile` sizes output files
-   * (default 4M rows ≈ the 128 MB-class file the unparametrized
-   * compact always produced). */
+   * table is actually read by. `rowsPerFile` caps the rows per output
+   * file (default 4M rows ≈ a 128 MB-class file). Below the cap the
+   * count has a per-core floor: a table of at least
+   * [[SeriesStore.MinRowsPerCoreFile]] rows per core is written as at
+   * least one file per core (`defaultParallelism`), so a whole-series
+   * read keeps every core busy; smaller tables stay one file. */
   def compact(db: String, catPtr: Option[String],
       rowsPerFile: Long = 4000000L): Unit =
     compact(db, catPtr, rowsPerFile, None)
@@ -1017,8 +1020,11 @@ class SeriesStore(spark: SparkSession, root: String) {
    * this avoids), so the snapshot's `clean` flag is preserved: a
    * clean table stays clean (no duplicate keys existed), a dirty one
    * stays dirty and read-side dedup keeps applying. Concurrent
-   * appends rebase into the kept set, like [[compact]]. Returns
-   * (files merged, files kept). */
+   * appends rebase into the kept set, like [[compact]]. Output is
+   * sized by bytes alone (one file per 128 MB), with no per-core floor
+   * as [[compact]] has: per-core files of a small table would all be
+   * under `smallBytes`, so every call would merge and split them
+   * again. Returns (files merged, files kept). */
   def compactSmall(db: String, smallBytes: Long = 32L << 20): (Int, Int) =
     compactSmall(db, smallBytes, None, None)
 
@@ -1057,7 +1063,9 @@ class SeriesStore(spark: SparkSession, root: String) {
    * (sizing count + write). Range partitioning by ts keeps per-file
    * min/max tight so file-level statistics prune narrow time ranges;
    * hash partitioning would spread every file across the whole
-   * series.
+   * series. The file count is capped by `rowsPerFile` and floored at
+   * one file per core for large tables
+   * ([[SeriesStore.MinRowsPerCoreFile]]).
    *
    * Concurrency: the rewrite is computed against one snapshot and
    * committed through [[CommitLog.commit]]: appends that land in
@@ -1076,7 +1084,9 @@ class SeriesStore(spark: SparkSession, root: String) {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = cached.count()
-      val partitions = math.max(1, (n / rowsPerFile).toInt)
+      val partitions = math.max(1L, math.max(n / rowsPerFile,
+        math.min(spark.sparkContext.defaultParallelism.toLong,
+          n / SeriesStore.MinRowsPerCoreFile))).toInt
       // declared category → cluster files by (category, ts) so the
       // manifest's per-file category sets come out narrow; declared
       // numeric column → cluster by (value, ts) so per-file min/max
@@ -1162,9 +1172,10 @@ class SeriesStore(spark: SparkSession, root: String) {
       post.anomaly.foreach(t => df = SeriesStats.anomaly(df, vcol, t))
       if (post.changepoint) df = SeriesStats.changepoint(df, vcol)
       // fixed output shape + restored bucket order (the joins above
-      // do not preserve the engine's sort)
+      // do not preserve the engine's sort); one partition, like the
+      // engine's own output sort
       df = df.select((base ++ post.derived).map(col): _*)
-        .orderBy(col(base.head))
+        .coalesce(1).sortWithinPartitions(col(base.head))
     }
     val rows = df.toLocalIterator().asScala
     var first = true
@@ -1240,6 +1251,16 @@ object SeriesStore {
    * executor broadcast budgets; above it the join shuffles both
    * sides (the mass-batch path). */
   val DeleteKeysBroadcastMax: Long = 1000000L
+
+  /** Per-core file floor of a full rewrite ([[SeriesStore.compact]],
+   * `deleteRange`), which writes `max(n / rowsPerFile, min(cores,
+   * n / MinRowsPerCoreFile))` files (at least 1) for `n` rows: once a
+   * table holds this many rows per core, it is written as at least one
+   * ts-range file per core, so a whole-series read runs one scan task
+   * per core instead of one. 16,384 rows is ~64 ms of JSON-pointer
+   * parsing at ~4 µs/row, about 5× the ~13 ms per-task floor of a
+   * local stage; smaller tables stay one file. */
+  val MinRowsPerCoreFile = 16384L
 
   /** Interval stabbing for [[deleteKeys]]' file selection, executed
    * per key on the executors: `mins`/`maxs` are the stat files'

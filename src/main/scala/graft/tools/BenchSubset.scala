@@ -9,8 +9,9 @@ package graft.tools
  *
  * Usage: `runMain graft.tools.BenchSubset <sfDir> <name1,name2,...>`
  * Prints one `BENCHSUBSET <name> <best-of-3 sec>` line per query.
- * Every query is warmed on sf0.001 before any is timed, which charges
- * codegen to the warmup, as in [[graft.Bench]].
+ * Every query is warmed on the `sf0.001` sibling of `<sfDir>` (or on
+ * `<sfDir>` itself when there is none) before any is timed, which
+ * charges codegen to the warmup, as in [[graft.Bench]].
  *
  * SAMPLE HYGIENE, automated (the r14/r15 floors were hand-filtered):
  * two contamination modes get detected and re-run in-harness —
@@ -49,13 +50,10 @@ object BenchSubset {
       .partition(graft.SparkEntry.queries.contains)
     unknown.foreach(n => System.err.println(s"[benchsubset] unknown query: $n"))
     val spark = LocalSession()
-    // warmup on the smallest available SF: the codegen cost (2-5×
+    // warmup on the sibling sf0.001: the codegen cost (2-5×
     // steady-state) must bill the warmup pass, not the sample
-    val warmDir = {
-      val tiny = new java.io.File("/root/testdata/sf0.001")
-      if (tiny.isDirectory) tiny.toString else dir
-    }
-    val results = SampleHygiene.sampleAll(spark, names, warmDir, dir)
+    val results = SampleHygiene.sampleAll(spark, names,
+      SampleHygiene.warmDir(dir), dir)
     results.foreach { r =>
       val flag = if (r.threw) " FAILED" else ""
       val slow = if (r.io >= 0 && r.io < IoProbe.SlowMbps) " SLOW-IO" else ""

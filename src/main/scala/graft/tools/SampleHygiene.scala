@@ -146,6 +146,14 @@ object SampleHygiene {
     def contaminated: Boolean = SampleHygiene.contaminated(io, residue)
   }
 
+  /** The warmup directory for a run measured on `sfDir`: its sibling
+   * `sf0.001` when that exists, else `sfDir` itself. */
+  def warmDir(sfDir: String): String = {
+    val tiny = new java.io.File(
+      new java.io.File(sfDir).getAbsoluteFile.getParentFile, "sf0.001")
+    if (tiny.isDirectory) tiny.toString else sfDir
+  }
+
   /** The bench sampling loop. Untimed warmup first: every query runs
    * once on `warmDir` (the smallest SF), which charges Janino
    * whole-stage-codegen compilation (2-5x a query's steady-state cost)

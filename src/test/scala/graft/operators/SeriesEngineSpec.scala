@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import graft.operators.SeriesEngine.SeriesQuery
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /**
  * Reducer golden values ported from the reference (query_test.go:13-240,
@@ -303,5 +304,17 @@ class SeriesEngineSpec extends SparkSpec {
       to = Some((B + 50).toString), names = Seq("s"))).collect()
     assert(rows.map(_.getLong(0)).toSeq ==
       Seq((B + 20) * 1000, (B + 30) * 1000, (B + 40) * 1000))
+  }
+
+  test("plan shape: a non-rate query shuffles once, with no range exchange") {
+    val df = run("sum")
+    df.collect() // materialize so AQE settles on the final plan
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val p = plan.toString
+    assert(!p.contains("rangepartitioning"), s"global sort exchange:\n$p")
+    assert("\\bExchange\\b".r.findAllIn(p).size == 1, s"exchanges:\n$p")
   }
 }

@@ -440,4 +440,43 @@ class SeriesStoreSpec extends SparkSpec {
     val refs = s.history("lg").flatMap(_.files.map(_.name))
     assert(refs.distinct.size == refs.size)
   }
+
+  test("compact writes one ts-range file per core once a table is large enough") {
+    import org.apache.spark.sql.functions.{col, concat, lit, pmod}
+    val s = newStore()
+    s.create("db")
+    val cores = spark.sparkContext.defaultParallelism
+    val n = math.max(4, cores) * SeriesStore.MinRowsPerCoreFile
+    val day = 86400L * 1000000000L
+    val base = 1346189040L * 1000000000L
+    val step = 30 * day / n
+    def docs(rows: Long, salt: String) = spark.range(rows).select(
+      (lit(base) + col("id") * step).as("ts"),
+      concat(lit("""{"v": """), pmod(col("id"), lit(97)).cast("string"),
+        lit(s""", "k": "$salt"""), pmod(col("id"), lit(5)).cast("string"),
+        lit("\"}")).as("doc"))
+    s.storeBatch("db", docs(n, "a"))
+    s.storeBatch("db", docs(n / 8, "b")) // overwrites: dirty until compact
+    def sec(ns: Long) = (ns / 1000000000L).toString
+    val (d10, d11) = (sec(base + 10 * day), sec(base + 11 * day))
+    val queries = Seq(
+      SeriesQuery(3600000L, Seq("/v", "/v", "/k", "/v"),
+        Seq("count", "sum", "distinct", "avg"), from = Some(d10), to = Some(d11)),
+      SeriesQuery(86400000L, Seq("/v", "/v", "/v"), Seq("count", "min", "max")))
+    def answers = (queries.map(s.queryJson("db", _)),
+      s.all("db", Some(d10), Some(d11)).select("doc").as[String].collect().toSeq,
+      s.all("db", limit = 500).select("doc").as[String].collect().toSeq)
+    val before = answers
+    s.compact("db")
+    assert(answers == before)
+    val files = s.scanFiles("db")
+    assert(files.size >= cores, s"${files.size} files on $cores cores")
+    assert(files.map(_.rows).sum == n)
+    files.sliding(2).foreach { case Seq(a, b) =>
+      assert(a.minTs <= a.maxTs && a.maxTs < b.minTs,
+        s"overlapping or unordered files: $a, $b")
+    }
+    val oneDay = s.scanFiles("db", Some(base + 10 * day), Some(base + 11 * day))
+    assert(oneDay.nonEmpty && oneDay.size <= 2, s"1-day read scans $oneDay")
+  }
 }
